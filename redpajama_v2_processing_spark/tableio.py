@@ -14,8 +14,13 @@ Iceberg semantics the engine needs behind a thin interface (swap for a real
   previous snapshot + its data dir untouched (readers/resume never see a
   half-state); orphaned dirs from crashed commits are garbage-collected
   by the next successful commit. The snapshot also records row counts per
-  partition — the lineage/metrics the reference hand-rolled as
-  parquet_metadata.jsonl (src/get_metadata_signatures.py:32-40);
+  partition, summed on the driver from the footers of the parquet files
+  that landed (no Spark job) — the lineage/metrics the reference
+  hand-rolled as parquet_metadata.jsonl by reading the metadata of the
+  files it had just written (src/get_metadata_signatures.py:32-40);
+* schema in the snapshot: each snapshot carries the table's StructType
+  (data columns, then partition columns), so reads — time travel included
+  — run with an explicit schema and no inference job;
 * resume: a stage is complete iff its snapshot exists — replaces the
   reference's "output file exists => stage done" convention
   (src/minhashlsh.py:261-262) with an atomic marker.
@@ -28,11 +33,15 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass
-from typing import Callable
+from typing import Callable, Iterator
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _snapshot_path(table_dir: str) -> str:
@@ -76,19 +85,27 @@ def table_committed(table_dir: str) -> bool:
     return os.path.exists(_snapshot_path(table_dir))
 
 
-def _live_data_dir(table_dir: str, version: int | None = None) -> str:
+def _select_snapshot(table_dir: str, version: int | None = None) -> dict:
+    """The live snapshot, or the retained snapshot ``version``."""
     if version is None:
-        snap = read_snapshot(table_dir)
-    else:
-        matches = [s for s in snapshot_history(table_dir) if s["version"] == version]
-        if not matches:
-            raise ValueError(f"no snapshot version {version} at {table_dir}")
-        snap = matches[0]
-        if not snap["retained"]:
-            raise ValueError(
-                f"version {version} was garbage-collected (raise keep_versions)"
-            )
+        return read_snapshot(table_dir)
+    matches = [s for s in snapshot_history(table_dir) if s["version"] == version]
+    if not matches:
+        raise ValueError(f"no snapshot version {version} at {table_dir}")
+    snap = matches[0]
+    if not snap["retained"]:
+        raise ValueError(
+            f"version {version} was garbage-collected (raise keep_versions)"
+        )
+    return snap
+
+
+def _data_path(table_dir: str, snap: dict) -> str:
     return os.path.join(table_dir, snap.get("data_dir", "data"))
+
+
+def _live_data_dir(table_dir: str, version: int | None = None) -> str:
+    return _data_path(table_dir, _select_snapshot(table_dir, version))
 
 
 def read_table(
@@ -97,8 +114,17 @@ def read_table(
     """Read the committed table: the snapshot names the live data dir
     (``data_dir``), so readers can never observe an in-flight commit.
     ``version`` time-travels to an older retained snapshot (Iceberg
-    ``VERSION AS OF`` analog; retention set by commit_table(keep_versions))."""
-    return spark.read.parquet(_live_data_dir(table_dir, version))
+    ``VERSION AS OF`` analog; retention set by commit_table(keep_versions)).
+
+    The read uses the selected snapshot's recorded schema, so it runs no
+    inference job and an empty partitioned table still has its columns.
+    Snapshots written before the schema was recorded are read with
+    inference."""
+    snap = _select_snapshot(table_dir, version)
+    reader = spark.read
+    if "schema" in snap:
+        reader = reader.schema(StructType.fromJson(snap["schema"]))
+    return reader.parquet(_data_path(table_dir, snap))
 
 
 def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
@@ -158,21 +184,24 @@ def commit_table(
         writer = writer.partitionBy(*parts)
     writer.parquet(new_path)
 
-    committed = df.sparkSession.read.parquet(new_path)
-    if parts:
-        part_counts = {
-            "|".join(str(r[p]) for p in parts): r["n"]
-            for r in committed.groupBy(*parts).agg(F.count("*").alias("n")).collect()
-        }
-    else:
-        part_counts = {}
+    # counts from the footers of the files that landed: no read-back job
+    part_counts: Counter[str] = Counter()
+    for part_dirs, path in _data_files(new_path):
+        part_counts["|".join(_partition_value(d) for d in part_dirs)] += (
+            pq.read_metadata(path).num_rows
+        )
+    # the order Spark's reader yields: data columns, then partition columns
+    schema = StructType(
+        [f for f in out.schema if f.name not in parts] + [out.schema[p] for p in parts]
+    )
     prev_snap = read_snapshot(table_dir) if table_committed(table_dir) else None
     prev_version = prev_snap.get("version", 0) if prev_snap else 0
     snapshot = {
         "version": prev_version + 1,
-        "rows": committed.count(),
-        "partitions": part_counts,
+        "rows": sum(part_counts.values()),
+        "partitions": dict(part_counts) if parts else {},
         "partition_by": parts,
+        "schema": schema.jsonValue(),
         "data_dir": data_dir,
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "meta": meta or {},
@@ -227,12 +256,35 @@ def commit_table(
     return snapshot
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file reader skips (``_SUCCESS``, ``.crc`` sidecars,
+    ``_temporary``), except ``_col=v`` partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(data_dir: str) -> Iterator[tuple[list[str], str]]:
+    """Every parquet data file under ``data_dir`` as (its ``k=v``
+    partition directory names, outermost first; its path)."""
+    for root, dirs, files in os.walk(data_dir):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        rel = os.path.relpath(root, data_dir)
+        part_dirs = [] if rel == "." else rel.split(os.sep)
+        for f in files:
+            if f.endswith(".parquet") and not _hidden(f):
+                yield part_dirs, os.path.join(root, f)
+
+
+def _partition_value(part_dir: str) -> str:
+    """``k=v`` directory name -> the value as ``str()`` of the read-back
+    column renders it: Spark's ``%XX`` path escaping undone, its null
+    marker mapped to ``"None"``."""
+    value = part_dir.split("=", 1)[1]
+    return "None" if value == "__HIVE_DEFAULT_PARTITION__" else unquote(value)
+
+
 def data_file_count(table_dir: str, version: int | None = None) -> int:
     """Number of parquet data files in a snapshot's live data dir."""
-    n = 0
-    for _root, _dirs, files in os.walk(_live_data_dir(table_dir, version)):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
+    return sum(1 for _ in _data_files(_live_data_dir(table_dir, version)))
 
 
 def compact_table(
@@ -330,7 +382,7 @@ def check_completeness(
     if min_rows is not None and snap["rows"] < min_rows:
         raise CompletenessError(f"snapshot rows {snap['rows']} < min {min_rows}")
     if spark is not None:
-        actual = spark.read.parquet(_live_data_dir(table_dir)).count()
+        actual = read_table(spark, table_dir).count()
         if actual != snap["rows"]:
             raise CompletenessError(
                 f"physical row count {actual} != snapshot {snap['rows']}"
@@ -367,6 +419,10 @@ def run_stages(
     one metrics record per executed/skipped stage to
     ``warehouse/_metrics.jsonl``.
 
+    ``rows_in`` of an executed stage is the ``rows_out`` of the stage before
+    it (the snapshot row count of the table it reads), whether that stage
+    ran or was skipped; only the first stage counts its source.
+
     ``verify=True`` runs check_completeness on every stage table the DAG
     consumes — freshly committed AND resumed ones — so a lost/truncated
     table fails HERE (CompletenessError) instead of surfacing as silently
@@ -389,7 +445,7 @@ def run_stages(
                 "rows_out": read_snapshot(tdir)["rows"], "seconds": 0.0,
             }
         else:
-            rows_in = cur.count()
+            rows_in = records[-1]["rows_out"] if records else cur.count()
             out = st.fn(cur)
             snap = commit_table(
                 out, tdir, st.partition_by, st.derive_date_from,
