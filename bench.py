@@ -140,35 +140,16 @@ def ensure_bench_pages(spark, rows: int = BENCH_PAGES_ROWS) -> str:
 
 def run_pages_pipeline(spark, pages_dir: str) -> tuple[int, float]:
     """The north-rule job: extract -> label -> quality -> exact -> fuzzy
-    over a pages table; returns (docs_in, seconds)."""
-    from pyspark.sql import functions as F
-
-    from redpajama_v2_processing_spark.config import PROD_MINHASH
-    from redpajama_v2_processing_spark.functions.extract import extract_text
-    from redpajama_v2_processing_spark.operators.exact_dedup import exact_keep_ids
-    from redpajama_v2_processing_spark.operators.minhash_lsh import (
-        fuzzy_dedup_keep_ids,
-    )
-    from redpajama_v2_processing_spark.plans.pipeline import label_documents
-    from redpajama_v2_processing_spark.sources.pages import read_pages, with_ids
+    over a pages table, as the headline's full_pipeline; returns
+    (docs_in, seconds)."""
+    from redpajama_v2_processing_spark.plans.pipeline import full_pipeline
+    from redpajama_v2_processing_spark.sources.pages import extract_pages, read_pages
 
     pages = read_pages(spark, pages_dir)
     n_in = pages.count()
     t0 = time.time()
-    docs = with_ids(
-        pages.withColumn("text", extract_text(F.col("html").cast("string"))).drop("html")
-    )
-    # fully lazy, single action: recomputing the (cheap, perfectly parallel)
-    # label stage per consumer beats persist+materialize fixed costs here —
-    # caching wins only below ~8 cores; a real cluster job would checkpoint
-    # stage outputs to the warehouse (tableio) instead of executor memory.
-    labeled = label_documents(docs, id_col="id_int").where(F.col("keep"))
-    exact = labeled.join(exact_keep_ids(labeled, "id_int"), "id_int", "left_semi")
-    fuzzy_keep = fuzzy_dedup_keep_ids(
-        exact, "id_int", cfg=PROD_MINHASH, base="xxhash", salted=True
-    ).withColumnRenamed("id", "id_int")
-    survivors = exact.join(fuzzy_keep, "id_int", "left_semi")
-    survivors.write.mode("overwrite").format("noop").save()
+    out = full_pipeline(extract_pages(pages), "id_int", eager=False)
+    out.write.mode("overwrite").format("noop").save()
     return n_in, time.time() - t0
 
 

@@ -106,6 +106,13 @@ def connected_components(
     """edges: DF(src:long, dst:long) undirected. Returns DF(id, root) for
     every node appearing in the edge set; root = component min id.
 
+    Input contract: self-loops are dropped; duplicate edges (in either
+    orientation) are tolerated and give the same result, but distinct
+    input is recommended — ``driver_threshold`` counts the RAW edge rows
+    (after self-loop removal, before any dedup), so duplicates can push a
+    small graph onto the distributed path, never the reverse. Every
+    in-repo edge producer already ends in ``.distinct()``.
+
     Each round is localCheckpoint-ed (lineage truncation: without it the
     plan doubles per round and analysis time explodes). Superseded rounds'
     checkpoint blocks are explicitly unpersisted once the final result is
@@ -119,15 +126,9 @@ def connected_components(
         driver_threshold = CC_DRIVER_THRESHOLD
     sc = edges.sparkSession.sparkContext
     pre_existing = _persistent_ids(sc)
-    # NO distinct here: every in-repo edge producer already emits distinct
-    # pairs (candidate_edges/salted_bucket_edges/simhash/winnow/jaccard all
-    # end in .distinct(), the verify paths consume distinct candidates), so
-    # the old upfront distinct was one full exchange of the edge set per
-    # dedup query for nothing. Duplicate edges are tolerated everywhere
-    # downstream: union-find is idempotent, the star rounds distinct
-    # internally, and the row-count threshold merely turns conservative
-    # (duplicates can push a small graph onto the distributed path, never
-    # the reverse). The checkpoint now materializes a narrow filter.
+    # NO distinct here (see the input contract): it would be one full
+    # exchange of the edge set per dedup query for nothing. Union-find is
+    # idempotent and the star rounds distinct internally.
     cur = (
         edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
         .where(F.col("src") != F.col("dst"))
@@ -171,13 +172,15 @@ def connected_components(
     return result
 
 
-def keep_min_id(ids: DataFrame, cc: DataFrame) -> DataFrame:
-    """DF(id): the dedup family's shared keep rule — ids whose component
-    root is themselves. ``ids`` must be a single-column (id) frame of
-    every candidate id; ids absent from the label frame (singletons and
-    unsignable inputs) keep themselves via the null-root coalesce."""
+def keep_min_id(rows: DataFrame, cc: DataFrame, id_col: str = "id") -> DataFrame:
+    """The dedup family's shared keep rule: the rows of ``rows`` whose
+    component root (from the DF(id, root) frame ``cc``) is themselves.
+    ``rows`` must hold every candidate once under ``id_col``; ids absent
+    from the label frame (singletons and unsignable inputs) keep
+    themselves via the null-root coalesce. Every column of ``rows`` is
+    kept."""
     return (
-        ids.join(cc, "id", "left")
-        .where(F.coalesce("root", F.col("id")) == F.col("id"))
-        .select("id")
+        rows.join(cc.withColumnRenamed("id", id_col), id_col, "left")
+        .where(F.coalesce("root", F.col(id_col)) == F.col(id_col))
+        .drop("root")
     )

@@ -5,8 +5,10 @@ duplicates table (src/filter_exact_duplicates.py:89-133), realized there as
 an in-RAM python set (≤51 GB, 3 h build). Spark realization:
 
 * ``dedup_exact``: content dedup — keep the min-id doc per identical
-  (normalized) text. One shuffle on the 60-bit fingerprint; window min-id
-  keeps it a single exchange (no join).
+  (normalized) text: ``exact_keep_ids`` (a partial-aggregated min id per
+  60-bit fingerprint) semi-joined back on the id. Map-side partial
+  aggregation folds an identical-text flood to one (fingerprint, id) row
+  per partition before the shuffle; only ids cross it, never text.
 * ``anti_join_duplicates``: the reference's Bloom-duplicates stage as a
   ``left_anti`` join; Spark's runtime Bloom-filter join pruning
   (spark.sql.optimizer.runtime.bloomFilter.enabled, on in session.py) gives
@@ -15,22 +17,16 @@ an in-RAM python set (≤51 GB, 3 h build). Spark realization:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_int
 
 
 def dedup_exact(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Keep min-id row per distinct normalized text. Single shuffle."""
-    fp = fingerprint_int(F.col(text_col))
-    w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
-    return (
-        docs.withColumn("_fp", fp)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
-    )
+    """Rows of ``docs`` whose id is the min id of their normalized-text
+    fingerprint. ``id_col`` must be unique per row."""
+    return docs.join(exact_keep_ids(docs, id_col, text_col), id_col, "left_semi")
 
 
 def exact_keep_ids(docs: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..config import ORACLE_MINHASH
 from ..functions.hashing import PERM_PRIME, md5int, perm_coeffs
 from ..functions.text import tokens, word_ngrams, normalize
-from .connected_components import connected_components
+from .connected_components import connected_components, keep_min_id
 
 
 def shingles_of(tok, norm, n: int):
@@ -207,6 +207,15 @@ def salted_bucket_edges(bands_df: DataFrame, salt_buckets: int = 16) -> DataFram
     )
 
 
+def _components(
+    bands: DataFrame, salted: bool, cc_driver_threshold: int | None
+) -> DataFrame:
+    """DF(id, root) over the docs that share a band bucket with another:
+    star edges (salted or plain) -> connected components."""
+    edges = salted_bucket_edges(bands) if salted else candidate_edges(bands)
+    return connected_components(edges, driver_threshold=cc_driver_threshold)
+
+
 def fuzzy_dedup_labels(
     docs: DataFrame,
     id_col: str,
@@ -217,9 +226,8 @@ def fuzzy_dedup_labels(
     cc_driver_threshold: int | None = None,
 ) -> DataFrame:
     """DF(id, root): component root per doc id (root==id for singletons)."""
-    bands = minhash_bands(docs, id_col, text_col, cfg, base)
-    edges = salted_bucket_edges(bands) if salted else candidate_edges(bands)
-    cc = connected_components(edges, driver_threshold=cc_driver_threshold)
+    cc = _components(minhash_bands(docs, id_col, text_col, cfg, base), salted,
+                     cc_driver_threshold)
     ids = docs.select(F.col(id_col).alias("id"))
     return ids.join(cc, "id", "left").select(
         "id", F.coalesce("root", F.col("id")).alias("root")
@@ -245,6 +253,28 @@ def dedup_cluster_sizes(
     )
 
 
+def fuzzy_dedup(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    cfg: dict = ORACLE_MINHASH,
+    base: str = "md5",
+    salted: bool = False,
+    cc_driver_threshold: int | None = None,
+) -> DataFrame:
+    """The rows of ``docs`` that survive fuzzy dedup: one doc (the min id)
+    per near-dup component, singletons and unsignable docs included.
+    Mirrors src/minhashlsh.py:169 (keep root==id). ``id_col`` must be
+    unique per row.
+
+    One left join of ``docs`` against the (dup-cluster-sized) component
+    frame applies the keep rule, so the surviving rows come back without
+    a keep-list + semi join over the corpus."""
+    cc = _components(minhash_bands(docs, id_col, text_col, cfg, base), salted,
+                     cc_driver_threshold)
+    return keep_min_id(docs, cc, id_col)
+
+
 def fuzzy_dedup_keep_ids(
     docs: DataFrame,
     id_col: str,
@@ -254,12 +284,10 @@ def fuzzy_dedup_keep_ids(
     salted: bool = False,
     cc_driver_threshold: int | None = None,
 ) -> DataFrame:
-    """DF(id): the keep-list — one doc (the min id) per near-dup component,
-    singletons included. Mirrors src/minhashlsh.py:169 (keep root==id)."""
-    labels = fuzzy_dedup_labels(
+    """DF(id): the ids of ``fuzzy_dedup``'s surviving rows."""
+    return fuzzy_dedup(
         docs, id_col, text_col, cfg, base, salted, cc_driver_threshold
-    )
-    return labels.where(F.col("root") == F.col("id")).select("id")
+    ).select(F.col(id_col).alias("id"))
 
 
 def fuzzy_dedup_keep_best(
@@ -389,12 +417,6 @@ def incremental_fuzzy_keep_ids(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    surv_bands = nb.join(hit, "id", "left_anti")
-    edges = (
-        salted_bucket_edges(surv_bands) if salted else candidate_edges(surv_bands)
-    )
-    cc = connected_components(edges, driver_threshold=cc_driver_threshold)
+    cc = _components(nb.join(hit, "id", "left_anti"), salted, cc_driver_threshold)
     ids = new_docs.select(F.col(id_col).alias("id")).join(hit, "id", "left_anti")
-    from .connected_components import keep_min_id
-
     return keep_min_id(ids, cc)

@@ -144,11 +144,15 @@ def simhash_dedup_keep(
     bucket mins, so high-similarity clusters stay connected (exactly the
     LSH recall model).
     """
-    from .connected_components import connected_components, keep_min_id
+    from .connected_components import (
+        _persistent_ids, _unpersist, connected_components, keep_min_id,
+    )
 
     from ..functions.vectors import verify_partitions
 
     sh = with_simhash(docs, id_col, text_col, bits, portable)
+    sc = docs.sparkSession.sparkContext
+    before = _persistent_ids(sc)
     # banded feeds the bucket-min aggregation AND the edge join (no
     # subplan sharing — the signature pass would run twice); repartition
     # by the bucket key before the checkpoint so (a) the byte-based AQE
@@ -157,6 +161,7 @@ def simhash_dedup_keep(
     banded = _banded_simhash(sh, bits, band_bits).repartition(
         verify_partitions(docs), "band", "key"
     ).localCheckpoint(eager=True)
+    banded_ids = _persistent_ids(sc) - before
     buckets = banded.groupBy("band", "key").agg(
         F.min("id").alias("_min_id"), F.min_by("simhash", "id").alias("_min_sim")
     )
@@ -173,6 +178,9 @@ def simhash_dedup_keep(
         .distinct()
     )
     cc = connected_components(edges)
+    # cc is materialized (driver rows or its own checkpoint): the edges
+    # are consumed, so the banded checkpoint can go
+    _unpersist(sc, banded_ids)
     # ids straight from the docs scan (one row per doc == with_simhash's
     # output set) — selecting off `sh` would re-run the tokenize+vote
     # aggregation just to list ids

@@ -8,16 +8,15 @@ resumable execution lives in tableio.py / run_pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.langid import with_langid
 from ..functions.scrub import scrub_pii
 from ..functions.signals import with_signals
 from ..functions.text import fingerprint_int
-from ..operators.connected_components import connected_components
-from ..operators.exact_dedup import exact_keep_ids
-from ..operators.minhash_lsh import minhash_bands, salted_bucket_edges
+from ..operators.exact_dedup import dedup_exact, exact_keep_ids
+from ..operators.minhash_lsh import fuzzy_dedup
 from ..operators.quality_filter import with_quality_label
 from ..config import PROD_MINHASH
 
@@ -54,48 +53,25 @@ def full_pipeline(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", eager: bool = True) -> DataFrame:
     """The reference's complete corpus-production semantics in one DAG:
     quality filter -> exact dedup -> fuzzy dedup; returns surviving docs
-    with labels. (Batch composition; the checkpointed staged variant is
-    tableio.run_stages.)
+    with labels. The same operators as the committed stages of
+    sources.pages.pages_stages: ``kept`` is the in-memory analogue of the
+    committed ``quality`` table, labelled once and read by both sides of
+    the exact stage.
 
     ``eager=True`` (default) materializes the result once via
-    localCheckpoint while the intermediate survivor cache is live, then
-    frees that cache — no dangling persisted intermediate after the call
-    (the result's own checkpoint blocks belong to the returned DataFrame
-    and are context-cleaned when it is dropped). ``eager=False`` returns
-    the fully lazy plan and the caller owns the survivor cache lifetime
-    (``.unpersist()`` any persisted inputs after the final action)."""
-    labeled = label_documents(docs, id_col, text_col).where(F.col("keep"))
-    # exact dedup as ONE row_number window over the fingerprint column the
-    # label stage already computed: the previous exact_keep_ids + left_semi
-    # composition evaluated the full label chain TWICE (Catalyst shares no
-    # subplans, and the quality-keep filter forces the signal expressions on
-    # both sides) and paid two exchanges (groupBy fingerprint + semi join on
-    # id); this is one label pass and one exchange (guide §2.4). Result rows
-    # are identical: min id per fingerprint among quality-kept docs. Skew
-    # note: a hot fingerprint is an identical-text flood — the window
-    # reducer streams that bucket linearly, the same worst case the semi
-    # join's build side had.
-    w = Window.partitionBy("fingerprint").orderBy(F.col(id_col).asc())
-    survivors = (
-        labeled.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .persist()
-    )
-    # fuzzy keep applied as ONE left join against the (dup-cluster-sized)
-    # CC label frame instead of keep-ids + a second corpus-wide semi join:
-    # root == id (or no root) keeps the doc — identical keep rule to
-    # fuzzy_dedup_keep_ids, one fewer corpus shuffle.
-    bands = minhash_bands(survivors, id_col, text_col, PROD_MINHASH, "xxhash")
-    cc = connected_components(salted_bucket_edges(bands)).withColumnRenamed(
-        "id", id_col
-    )
-    out = (
-        survivors.join(cc, id_col, "left")
-        .where(F.coalesce("root", F.col(id_col)) == F.col(id_col))
-        .drop("root")
-    )
+    localCheckpoint while the intermediate caches are live, then frees
+    them — no dangling persisted intermediate after the call (the
+    result's own checkpoint blocks belong to the returned DataFrame and
+    are context-cleaned when it is dropped). ``eager=False`` returns the
+    result unmaterialized and the caller owns the intermediate cache
+    lifetime (``.unpersist()`` any persisted inputs after the final
+    action)."""
+    kept = label_documents(docs, id_col, text_col).where(F.col("keep")).persist()
+    kept.count()
+    survivors = dedup_exact(kept, id_col, text_col).persist()
+    out = fuzzy_dedup(survivors, id_col, text_col, PROD_MINHASH, "xxhash", salted=True)
     if eager:
         out = out.localCheckpoint(eager=True)
         survivors.unpersist()
+        kept.unpersist()
     return out

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from ..config import PROD_MINHASH
 from ..fixtures import PAGES_SCHEMA
 from ..functions.extract import extract_text
-from ..operators.exact_dedup import exact_keep_ids
-from ..operators.minhash_lsh import fuzzy_dedup_keep_ids
+from ..operators.exact_dedup import dedup_exact
+from ..operators.minhash_lsh import fuzzy_dedup
 from ..plans.pipeline import label_documents
 from ..tableio import Stage
 
@@ -41,16 +41,20 @@ def with_ids(df: DataFrame) -> DataFrame:
     return df.withColumn("id_int", F.xxhash64("url"))
 
 
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """Raw pages -> docs: ``text`` re-extracted from ``html`` (dropped),
+    plus the ``id_int`` join key."""
+    return with_ids(
+        pages.withColumn("text", extract_text(F.col("html").cast("string"))).drop("html")
+    )
+
+
 def pages_stages(minhash_cfg: dict = PROD_MINHASH) -> list[Stage]:
     """The full corpus-production DAG over a pages table (reference
     README.md:4-7 re-expressed):
       extract -> label (signals+langid+scrub) -> quality -> exact -> fuzzy
-    Every stage output is a committed, lang/date-partitioned table."""
-
-    def extract(df: DataFrame) -> DataFrame:
-        return with_ids(
-            df.withColumn("text", extract_text(F.col("html").cast("string"))).drop("html")
-        )
+    Every stage output is a committed, lang/date-partitioned table; the
+    operators are those of plans.pipeline.full_pipeline."""
 
     def label(df: DataFrame) -> DataFrame:
         return label_documents(df, id_col="id_int", text_col="text")
@@ -59,18 +63,16 @@ def pages_stages(minhash_cfg: dict = PROD_MINHASH) -> list[Stage]:
         return df.where(F.col("keep"))
 
     def exact(df: DataFrame) -> DataFrame:
-        keep = exact_keep_ids(df, "id_int", "text")
-        return df.join(keep, "id_int", "left_semi")
+        return dedup_exact(df, "id_int", "text")
 
     def fuzzy(df: DataFrame) -> DataFrame:
-        keep = fuzzy_dedup_keep_ids(
+        return fuzzy_dedup(
             df, "id_int", "text", cfg=minhash_cfg, base="xxhash", salted=True
-        ).withColumnRenamed("id", "id_int")
-        return df.join(keep, "id_int", "left_semi")
+        )
 
     part = ("lang",)
     return [
-        Stage("extract", extract, part, derive_date_from="warc_ts"),
+        Stage("extract", extract_pages, part, derive_date_from="warc_ts"),
         Stage("label", label, part, derive_date_from="warc_ts"),
         Stage("quality", quality, part, derive_date_from="warc_ts"),
         Stage("exact_dedup", exact, part, derive_date_from="warc_ts"),

@@ -21,6 +21,26 @@ def test_exact_dedup_keeps_min_id(spark):
     kept = sorted(r.doc_id for r in exact_keep_ids(df, "doc_id").collect())
     assert kept == [0, 2, 4]  # 1 (case/ws variant) and 3 (exact copy) drop
     assert sorted(r.doc_id for r in dedup_exact(df, "doc_id").collect()) == [0, 2, 4]
+    # identical-text flood: one hot fingerprint (copies plus case and
+    # whitespace variants) spread over every partition, beside singletons
+    flood = ["ee ff", "EE FF", " ee\tff ", "ee  ff"] * 100
+    rows = ["zz"] + flood[:200] + ["yy"] + flood[200:]
+    fl = docs_frame(spark, rows).repartition(4)
+    got = sorted(r.doc_id for r in dedup_exact(fl, "doc_id").collect())
+    assert got == [0, 1, 201]
+    assert {r.text for r in dedup_exact(fl, "doc_id").collect()} == {"zz", "ee ff", "yy"}
+
+
+def test_exact_dedup_plan_is_partial_aggregated(spark):
+    """dedup_exact takes the min id per fingerprint with a map-side
+    partial aggregate (a hot fingerprint folds to one row per partition
+    before the shuffle) and no window."""
+    df = docs_frame(spark, ["aa bb", "aa  BB", "cc"])
+    plan = dedup_exact(df, "doc_id")._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan
+    partial = [ln for ln in plan.splitlines()
+               if "HashAggregate(keys=[_fp" in ln and "partial_min(doc_id" in ln]
+    assert partial, plan
 
 
 def test_anti_join_ignores_dangling(spark):

@@ -355,6 +355,32 @@ def test_pq_training_frees_iteration_checkpoints(spark):
     assert len(new) <= 1  # only the final codebook checkpoint survives
 
 
+def test_simhash_dedup_keep_frees_banded_checkpoint(spark):
+    """simhash_dedup_keep checkpoints its banded frame for two consumers;
+    once connected_components (driver path on this small input) has
+    returned, consuming the keep-list leaves no new persisted block."""
+    from redpajama_v2_processing_spark.config import PROD_SIMHASH
+    from redpajama_v2_processing_spark.operators.connected_components import (
+        _persistent_ids,
+    )
+    from redpajama_v2_processing_spark.operators.simhash_dedup import (
+        simhash_dedup_keep,
+    )
+
+    texts = ["template page header body footer same words everywhere"] * 4 + [
+        f"entirely distinct document number {i} unique{i} tokens{i}" for i in range(3)
+    ]
+    df = docs_frame(spark, texts)
+    sc = spark.sparkContext
+    before = _persistent_ids(sc)
+    keep = simhash_dedup_keep(
+        df, "doc_id", bits=PROD_SIMHASH["bits"], band_bits=PROD_SIMHASH["band_bits"],
+        max_hamming=PROD_SIMHASH["max_hamming"],
+    )
+    assert sorted(r.id for r in keep.collect()) == [0, 4, 5, 6]
+    assert _persistent_ids(sc) - before == set()
+
+
 def test_simhash_empty_and_null_docs_hash_to_zero(spark):
     """Round-7 explode_outer guard: empty/whitespace/null docs must keep
     simhash 0 under BOTH hash families. The xxhash family is the trap —

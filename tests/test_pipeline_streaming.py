@@ -78,6 +78,42 @@ def test_run_stages_and_resume(spark, tmp_path):
     assert sum(snap["partitions"].values()) == snap["rows"]
 
 
+def test_committed_stages_match_full_pipeline(spark, tmp_path):
+    """The committed stages (CLI run) and the in-memory full_pipeline are
+    one composition: the same surviving ids from the same pages, here
+    with a repeated-text flood (one quality-kept page under 40 urls)."""
+    from redpajama_v2_processing_spark.plans.pipeline import full_pipeline
+    from redpajama_v2_processing_spark.sources.pages import extract_pages
+
+    base_dir = str(tmp_path / "base")
+    write_pages(spark, base_dir, n_rows=120, seed=7, partitions=2)
+    base = read_pages(spark, base_dir)
+    kept_url = (
+        label_documents(extract_pages(base), id_col="id_int")
+        .where(F.col("keep")).orderBy("url").first().url
+    )
+    flood = (
+        base.where(F.col("url") == kept_url)
+        .crossJoin(spark.range(40))
+        .withColumn("url", F.concat(F.col("url"), F.lit("?copy="), F.col("id")))
+        .drop("id")
+    )
+    src_dir = str(tmp_path / "pages_in")
+    base.unionByName(flood).write.parquet(src_dir)
+
+    committed, _ = run_stages(
+        spark, read_pages(spark, src_dir), pages_stages(), str(tmp_path / "wh"),
+        resume=False,
+    )
+    got = sorted(r.id_int for r in committed.select("id_int").collect())
+    out = full_pipeline(extract_pages(read_pages(spark, src_dir)), "id_int")
+    want = sorted(r.id_int for r in out.select("id_int").collect())
+    assert got == want
+    flood_urls = {kept_url} | {f"{kept_url}?copy={i}" for i in range(40)}
+    survivors = {r.url for r in out.select("url").collect()}
+    assert len(survivors & flood_urls) == 1
+
+
 def test_streaming_labels_equal_batch(spark, tmp_path):
     src_dir = str(tmp_path / "pages_stream")
     write_pages(spark, src_dir, n_rows=80, seed=11, partitions=3)
